@@ -11,6 +11,8 @@ from tsfeatures_spark.compression import (
 )
 from tsfeatures_spark.compression.delta import dod_encode_windows
 
+SERIES_LENGTHS = [0, 1, 2, 59, 60, 61, 3661]
+
 
 def test_dod_roundtrip_sizes():
     rng = np.random.default_rng(42)
@@ -37,6 +39,16 @@ def test_dod_windows_batched_equals_single():
             for w in range(nw):
                 assert batched[w] == dod_encode(x[w * W : (w + 1) * W])
                 assert np.array_equal(dod_decode(batched[w]), x[w * W : (w + 1) * W].astype(np.int64))
+    # several series laid end to end: windows restart at each series
+    # boundary, and an empty series has no window
+    series = [rng.integers(0, 60000, size=n).astype(np.int32) for n in SERIES_LENGTHS]
+    for W in (60, 3600):
+        batched = dod_encode_windows(np.concatenate(series), W, lengths=SERIES_LENGTHS)
+        local = [x[w * W : (w + 1) * W] for x in series for w in range((len(x) + W - 1) // W)]
+        assert len(batched) == len(local)
+        for block, seg in zip(batched, local):
+            assert block == dod_encode(seg)
+            assert np.array_equal(dod_decode(block), seg.astype(np.int64))
 
 
 def test_xor_windows_batched_equals_single():
@@ -64,6 +76,15 @@ def test_xor_windows_batched_equals_single():
                 assert batched[w] == xor_encode(seg)
                 np.testing.assert_array_equal(
                     xor_decode(batched[w]), seg.astype(np.float64))
+    series = [np.round(np.cumsum(rng.normal(size=n)), 2) for n in SERIES_LENGTHS]
+    series[3][5:9] = special[:4]
+    for W in (24, 60):
+        batched = xor_encode_windows(np.concatenate(series), W, lengths=SERIES_LENGTHS)
+        local = [x[w * W : (w + 1) * W] for x in series for w in range((len(x) + W - 1) // W)]
+        assert len(batched) == len(local)
+        for block, seg in zip(batched, local):
+            assert block == xor_encode(seg)
+            np.testing.assert_array_equal(xor_decode(block).view(np.uint64), seg.view(np.uint64))
 
 
 def test_xor_roundtrip_bitexact():

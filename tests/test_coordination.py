@@ -97,6 +97,7 @@ def qc(tmp_path, monkeypatch):
     saves = []
     monkeypatch.setattr(q, "_save_pair", lambda *a: saves.append(a))
     monkeypatch.setattr(q, "capacity_probe", lambda cores, dur=1.2: 10_000.0)
+    monkeypatch.setattr(q, "log_probe", lambda *a, **k: None)
     q._test_saves = saves
     return q
 

@@ -48,6 +48,22 @@ def test_window_features_matrix_matches_kernels():
             _assert_close(feats[col][w], ref[key], f"w{w} {col}")
 
 
+@pytest.mark.parametrize("nw", [1, 2, 7])
+def test_window_features_matrix_batch_invariant(nw):
+    """A window's row is the same bit for bit whether it is computed alone
+    or with other windows in one call: the slice kernel batches windows of
+    many docs, so a value must not depend on the batch it lands in."""
+    rng = np.random.default_rng(nw)
+    X = np.round(rng.normal(2000, 300, size=(nw, 60)))
+    X[0, :30] = 0.0
+    batched = window_features_matrix(X)
+    for i in range(nw):
+        alone = window_features_matrix(X[i : i + 1])
+        for col, v in batched.items():
+            a = np.asarray(alone[col][0])
+            assert a.tobytes() == np.asarray(v[i]).tobytes(), (i, col, a, v[i])
+
+
 @pytest.mark.parametrize("n", [1, 2, 3, 9, 10, 11, 12, 19, 20, 21, 59, 400, 1399, 3599])
 def test_partial_window_row_matches_kernels(n):
     """The fused partial-row (round 4: one demean pass, one tile reshape,
@@ -160,6 +176,25 @@ def test_rollup_tiers_spark_end_to_end(spark):
     for col in ["n", "total_sum", "vmin", "vmax", "mean", "variance"]:
         assert np.allclose(derived[col].to_numpy(), direct[col].to_numpy(), rtol=1e-9, equal_nan=True), col
     out.unpersist()
+
+
+def test_rollup_tiers_skips_null_and_empty_tokens(spark):
+    """A doc whose tokens are null or empty yields no rows, and the other
+    docs of the same Arrow batch still roll up."""
+    from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+
+    _, tokens, _ = gen_doc(42, 3, mean_len=300)
+    schema = StructType([StructField("doc_id", StringType()),
+                         StructField("tokens", ArrayType(IntegerType())),
+                         StructField("source", StringType())])
+    rows = [("null", None, "web"), ("empty", [], "web"), ("ok", tokens.tolist(), "web")]
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    pdf = rollup_tiers(df).toPandas()
+    assert set(pdf["doc_id"]) == {"ok"}
+    local = rollup_doc("ok", "web", tokens)
+    for tier in TIERS:
+        sub = pdf[pdf.tier == tier].sort_values("window_id")
+        assert list(sub["block_digest"]) == list(local[tier]["block_digest"])
 
 
 def test_features_wide_spark_matches_kernels(spark):

@@ -59,7 +59,7 @@ def main() -> None:
     toks = token_table(spark, 8, partitions=2, mean_len=300)
     sections = [
         ("Tier cascade (rollup_tiers) — ZERO shuffle",
-         "One mapInPandas over the scan; no Exchange anywhere. This is the "
+         "One mapInArrow over the scan; no Exchange anywhere. This is the "
          "property that makes the cascade embarrassingly parallel at 10^12 "
          "rows.", rollup_tiers(toks)),
         ("Algebraic cascade merge (merge_algebraic 1m->1h) — pure SQL",
@@ -90,7 +90,7 @@ def main() -> None:
          _embdup_plan(spark, sf)),
         ("tok_rollup_tiers (driver-gate all-tier query) — ZERO shuffle",
          "The documents-derived all-tier cascade compiles to scan -> one "
-         "mapInPandas, exactly like the raw token path.",
+         "mapInArrow, exactly like the raw token path.",
          em.tok_rollup_tiers(spark, sf)),
         ("minhash LSH candidates — narrow band shuffle",
          "The band self-join + candidate dedup shuffles only (id, band) "

@@ -100,42 +100,67 @@ def dod_encode(x: np.ndarray) -> bytes:
     return header + varint_encode(zigzag_encode(dd))
 
 
-def dod_encode_windows(x: np.ndarray, W: int) -> list[bytes]:
-    """Batched per-window delta-of-delta encode of a whole doc: ONE varint
-    pass over the concatenated window dd-streams, then byte-offset slicing.
-    Output blocks are byte-identical to calling ``dod_encode`` per window
-    (diff is local, so each window's dd array is a slice of the doc's)."""
+def split_windows(n: int, W: int, lengths=None) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Windows of ``n`` ticks holding series of ``lengths`` (default: one
+    series) laid end to end, each cut into ``W``-tick windows that restart
+    at the series' first tick; the last window of a series may be short
+    and an empty series has none. Returns each window's start and length,
+    and each tick's window index."""
+    lengths = np.asarray([n] if lengths is None else lengths, dtype=np.int64)
+    if int(lengths.sum()) != n:
+        raise ValueError(f"series lengths sum to {int(lengths.sum())}, not {n}")
+    nw = -(-lengths // W)
+    k = np.arange(int(nw.sum())) - np.repeat(np.cumsum(nw) - nw, nw)
+    starts = np.repeat(np.cumsum(lengths) - lengths, nw) + k * W
+    L = np.minimum(W, np.repeat(lengths, nw) - k * W)
+    return starts, L, np.repeat(np.arange(len(L)), L)
+
+
+def join_blocks(parts: list[tuple[np.ndarray, np.ndarray]]) -> list[bytes]:
+    """One block per window from byte streams that each hold one segment
+    per window, given as (uint8 stream, per-window segment sizes): block w
+    is segment w of every part in order. All blocks are scattered into one
+    buffer, then sliced."""
+    sizes = sum(counts for _, counts in parts)
+    ends = np.cumsum(sizes)
+    at = ends - sizes
+    out = np.empty(int(ends[-1]) if len(ends) else 0, dtype=np.uint8)
+    for data, counts in parts:
+        out[np.arange(len(data)) + np.repeat(at - (np.cumsum(counts) - counts), counts)] = data
+        at = at + counts
+    buf = out.tobytes()
+    return [buf[a:b] for a, b in zip((ends - sizes).tolist(), ends.tolist())]
+
+
+_HEADER = np.dtype([("magic", "u1"), ("n", "<u8"), ("first", "<i8"), ("first_delta", "<i8")])
+
+
+def dod_encode_windows(x: np.ndarray, W: int, lengths=None) -> list[bytes]:
+    """Batched per-window delta-of-delta encode: ONE varint pass over the
+    concatenated window dd-streams, one packed header array, one output
+    buffer. ``x`` is one series, or with ``lengths`` several laid end to
+    end whose windows restart at each series boundary. Output blocks are
+    byte-identical to calling ``dod_encode`` per window (a window's dd
+    array is the slice of the series' dd whose three ticks share that
+    window)."""
     x = np.asarray(x).astype(np.int64, copy=False)
     n = x.shape[0]
-    nw = (n + W - 1) // W
-    if n == 0:
+    starts, L, win = split_windows(n, W, lengths)
+    nw = len(starts)
+    if nw == 0:
         return []
-    dd_full = np.diff(x, n=2) if n > 2 else np.empty(0, dtype=np.int64)
-    seg_starts = np.arange(nw) * W
-    seg_lens = np.minimum(W, n - seg_starts)
-    dd_counts = np.maximum(seg_lens - 2, 0)
-    segs = [dd_full[s : s + c] for s, c in zip(seg_starts, dd_counts) if c > 0]
-    if segs:
-        buf, nbytes = varint_encode_ex(zigzag_encode(np.concatenate(segs)))
-        ends_per_val = np.cumsum(nbytes)
-        val_ends = np.cumsum(dd_counts)
-        byte_ends = np.where(dd_counts > 0, ends_per_val[np.maximum(val_ends - 1, 0)], 0)
-        byte_ends = np.maximum.accumulate(byte_ends)
-    else:
-        buf = b""
-        byte_ends = np.zeros(nw, dtype=np.int64)
-    blocks: list[bytes] = []
-    prev_end = 0
-    for w in range(nw):
-        s = int(seg_starts[w])
-        L = int(seg_lens[w])
-        first = int(x[s])
-        first_delta = int(x[s + 1] - x[s]) if L >= 2 else 0
-        header = struct.pack("<BQqq", _MAGIC, L, first, first_delta)
-        e = int(byte_ends[w])
-        blocks.append(header + buf[prev_end:e] if L > 2 else header)
-        prev_end = e
-    return blocks
+    dd = np.diff(x, n=2)[win[:-2] == win[2:]]
+    buf, nbytes = varint_encode_ex(zigzag_encode(dd))
+    counts = np.maximum(L - 2, 0)
+    cum = np.concatenate([[0], np.cumsum(nbytes)])
+    val_ends = np.cumsum(counts)
+    hdr = np.zeros(nw, dtype=_HEADER)
+    hdr["magic"] = _MAGIC
+    hdr["n"] = L
+    hdr["first"] = x[starts]
+    hdr["first_delta"] = np.where(L >= 2, x[np.minimum(starts + 1, n - 1)] - x[starts], 0)
+    return join_blocks([(hdr.view(np.uint8), np.full(nw, _HEADER.itemsize)),
+                        (np.frombuffer(buf, dtype=np.uint8), cum[val_ends] - cum[val_ends - counts])])
 
 
 def dod_decode(buf: bytes) -> np.ndarray:

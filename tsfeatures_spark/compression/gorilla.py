@@ -20,9 +20,10 @@ import struct
 
 import numpy as np
 
-from .delta import BlockCorruption
+from .delta import BlockCorruption, join_blocks, split_windows
 
 _MAGIC = 2
+_HEADER = np.dtype([("magic", "u1"), ("n", "<u8"), ("first", "<f8")])
 
 
 def xor_encode(x: np.ndarray) -> bytes:
@@ -59,29 +60,24 @@ def xor_encode(x: np.ndarray) -> bytes:
     return header + packed_len + payload.tobytes()
 
 
-def xor_encode_windows(x: np.ndarray, W: int) -> list[bytes]:
-    """Batched per-window XOR encode of a whole series: the pairwise XORs,
-    significant-byte counts, and payload bytes for ALL windows are computed
-    in one vectorized pass over the concatenated array, then sliced per
-    window. Output blocks are byte-identical to ``xor_encode(x[w*W:(w+1)*W])``
-    per window (pinned by test) — the XOR chain is window-local because
-    each window re-seeds from its own first value, so the only per-window
-    work left is the (tiny) nibble packing and the byte slicing. This is
-    the higher-tier block path of rollup_doc: per-call numpy overhead on
-    ~60-element windows was ~10% of cascade CPU before batching."""
+def xor_encode_windows(x: np.ndarray, W: int, lengths=None) -> list[bytes]:
+    """Batched per-window XOR encode: the pairwise XORs, significant-byte
+    counts, nibble stream and payload bytes for ALL windows are computed in
+    one vectorized pass, headers come from one packed array, and every
+    block goes into one output buffer. ``x`` is one series, or with
+    ``lengths`` several laid end to end whose windows restart at each
+    series boundary. Output blocks are byte-identical to ``xor_encode`` of
+    each window (pinned by test): the XOR chain is window-local because
+    each window re-seeds from its own first value, and each window's
+    nibble run is padded to a whole byte. This is the higher-tier block
+    path of the rollup cascade."""
     x = np.ascontiguousarray(np.asarray(x, dtype=np.float64))
-    n = x.shape[0]
-    if n == 0:
+    starts, L, win = split_windows(x.shape[0], W, lengths)
+    nw = len(starts)
+    if nw == 0:
         return []
-    nw = (n + W - 1) // W
-    seg_starts = np.arange(nw) * W
-    seg_lens = np.minimum(W, n - seg_starts)
     bits = x.view(np.uint64)
-    # within-window consecutive pairs: pair i (between i and i+1) belongs
-    # to window i//W iff it does not straddle a boundary (i % W != W-1)
-    pair_keep = (np.arange(n - 1) % W) != (W - 1)
-    xors = (bits[1:] ^ bits[:-1])[pair_keep]
-    counts = np.maximum(seg_lens - 1, 0)
+    xors = (bits[1:] ^ bits[:-1])[win[1:] == win[:-1]]
     nbytes = np.zeros(len(xors), dtype=np.uint8)
     tmp = xors.copy()
     while np.any(tmp):
@@ -89,30 +85,28 @@ def xor_encode_windows(x: np.ndarray, W: int) -> list[bytes]:
         nbytes[nz] += 1
         tmp >>= np.uint64(8)
     ends = np.cumsum(nbytes.astype(np.int64))
-    starts = ends - nbytes
-    payload = np.empty(int(nbytes.sum()), dtype=np.uint8)
+    starts_b = ends - nbytes
+    payload = np.empty(int(ends[-1]) if len(ends) else 0, dtype=np.uint8)
     max_b = int(nbytes.max()) if len(nbytes) else 0
     for j in range(max_b):
         sel = nbytes > j
-        payload[starts[sel] + j] = ((xors[sel] >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
-    payload_b = payload.tobytes()
-    blocks: list[bytes] = []
-    pv = pb = 0
-    for w in range(nw):
-        L = int(seg_lens[w])
-        header = struct.pack("<BQd", _MAGIC, L, float(x[seg_starts[w]]) if L else 0.0)
-        if L <= 1:
-            blocks.append(header)
-            continue
-        c = int(counts[w])
-        nb_w = nbytes[pv:pv + c]
-        nib = np.append(nb_w, np.uint8(0)) if c % 2 else nb_w
-        packed = (nib[0::2] | (nib[1::2] << 4)).tobytes()
-        byte_c = int(ends[pv + c - 1] - (ends[pv - 1] if pv else 0))
-        blocks.append(header + packed + payload_b[pb:pb + byte_c])
-        pv += c
-        pb += byte_c
-    return blocks
+        payload[starts_b[sel] + j] = ((xors[sel] >> np.uint64(8 * j)) & np.uint64(0xFF)).astype(np.uint8)
+    # nibble stream: each window's byte counts padded to an even count, so
+    # byte pairs never straddle two windows
+    counts = L - 1
+    padded = counts + (counts & 1)
+    nib = np.zeros(int(padded.sum()), dtype=np.uint8)
+    nib[np.arange(len(nbytes)) + np.repeat((np.cumsum(padded) - padded) - (np.cumsum(counts) - counts),
+                                           counts)] = nbytes
+    cum = np.concatenate([[0], ends])
+    val_ends = np.cumsum(counts)
+    hdr = np.zeros(nw, dtype=_HEADER)
+    hdr["magic"] = _MAGIC
+    hdr["n"] = L
+    hdr["first"] = x[starts]
+    return join_blocks([(hdr.view(np.uint8), np.full(nw, _HEADER.itemsize)),
+                        (nib[0::2] | (nib[1::2] << 4), padded // 2),
+                        (payload, cum[val_ends] - cum[val_ends - counts])])
 
 
 def xor_decode(buf: bytes) -> np.ndarray:

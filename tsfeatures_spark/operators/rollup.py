@@ -2,16 +2,25 @@
 
 The engine's throughput core. Each input row is one whole series
 (doc_id, tokens:array<int32>) — self-contained — so the entire cascade is a
-single ``mapInPandas`` scan with ZERO shuffle: no Exchange appears in the
+single ``mapInArrow`` scan with ZERO shuffle: no Exchange appears in the
 physical plan (the reference pays one process-pool task per series,
-tsfeatures.py:970-971; we pay one Arrow batch per ~64 docs).
+tsfeatures.py:970-971).
+
+The kernel (``_rollup_slice``) runs once per slice of an Arrow input
+batch — about SLICE_TOKENS tokens of whole docs — not once per doc or per
+window: it reads the flat token values and list offsets, and per tier makes
+ONE ``window_features_matrix`` call over every full window of the slice,
+one ``_partial_window_row`` per trailing partial window, and ONE
+``dod_encode_windows`` / ``xor_encode_windows`` call whose windows restart
+at doc boundaries. Each slice leaves as one RecordBatch. ``rollup_doc`` is
+the same kernel over a one-doc slice.
 
 Per (doc, tier-window) we emit:
 - algebraic state: n, total_sum, vmin, vmax, mean, m2 (Chan-mergeable)
 - holistic north-star features (BASELINE.json): x_acf1, x_acf10,
   crossing_points, flat_spots, entropy, stability, lumpiness — computed
-  from raw, vectorized ACROSS windows (one rfft / one median call per doc
-  per tier, not per window)
+  from raw, vectorized ACROSS windows (one rfft / one median call per
+  slice per tier, not per window)
 - a compressed block: 1m = lossless delta-of-delta of the window's raw
   tokens (token-array equality invariant); 1h/1d = Gorilla-XOR of the
   child tier's per-window means (the downsampled series), plus sha256
@@ -24,20 +33,20 @@ uses so raw data is touched exactly once.
 
 Feature parity: each per-window value equals
 ``kernels.compute_features(window_tokens, freq=1, scale=False)`` — pinned
-by tests/test_rollup.py against the NumPy kernels directly.
+by tests/test_rollup.py against the NumPy kernels directly — and does not
+depend on which other windows share a kernel call.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, List
+from typing import List
 
 import numpy as np
-import pandas as pd
 
 from ..compression import xor_encode  # noqa: F401 (re-export for tests)
 from ..compression.gorilla import xor_encode_windows
-from ..compression.delta import dod_encode_windows
+from ..compression.delta import dod_encode_windows, split_windows
 from ..kernels import compute_features
 from ..kernels import stats as _st
 
@@ -57,8 +66,9 @@ ROLLUP_SCHEMA = (
     "block binary, block_digest string"
 )
 
-_KERNEL_FEATURES = ["statistics", "acf_features", "crossing_points",
-                    "flat_spots", "entropy", "stability", "lumpiness"]
+_OUT_COLS = [f.split(" ")[0] for f in ROLLUP_SCHEMA.split(", ")]
+_NUMERIC_COLS = _OUT_COLS[3:-2]  # window_id .. lumpiness
+_FLOAT_COLS = ["total_sum", "vmin", "vmax", "mean", "m2", "variance"] + HOLISTIC_FIELDS
 
 
 def _xlogx2(p: np.ndarray) -> np.ndarray:
@@ -94,7 +104,17 @@ def window_features_matrix(X: np.ndarray) -> dict:
         for k in range(1, 11):
             acfs[k - 1] = (xd[:, :-k] * xd[:, k:]).sum(axis=1) / denom
         out["x_acf1"] = acfs[0]
-        out["x_acf10"] = (acfs**2).sum(axis=0) if W > 10 else np.full(nw, np.nan)
+        # the ten squared lags summed in a fixed order: a reduction over
+        # axis 0 takes another order when nw == 1, which made a window's
+        # value depend on how many windows shared the call
+        if W > 10:
+            sq = acfs**2
+            acf10 = sq[0].copy()
+            for k in range(1, 10):
+                acf10 += sq[k]
+            out["x_acf10"] = acf10
+        else:
+            out["x_acf10"] = np.full(nw, np.nan)
         # --- crossing_points (median crossings)
         med = np.median(X, axis=1)
         ab = X <= med[:, None]
@@ -260,105 +280,153 @@ def _partial_window_row(xw: np.ndarray) -> dict:
         }
 
 
+# tokens per kernel call: large enough that per-call numpy overhead is
+# spread over many windows, small enough that a slice's working set (the
+# window matrices and their temporaries) stays a few MB
+SLICE_TOKENS = 1 << 18
+
+
+def _rollup_slice(tokens: np.ndarray, lengths: np.ndarray, start_ticks: np.ndarray,
+                  tiers: List[str]) -> dict[str, dict]:
+    """The cascade kernel over a slice of docs: ``tokens`` holds the docs'
+    tokens end to end, ``lengths`` the token count and ``start_ticks`` the
+    first tick of each doc (a multiple of every tier width). Per tier, ONE
+    ``window_features_matrix`` call over every full window of the slice,
+    one ``_partial_window_row`` per trailing partial window, and ONE codec
+    call for all blocks. Returns {tier: columns}; rows run doc by doc in
+    window order and column ``doc`` holds each row's doc index."""
+    tokens = np.asarray(tokens).astype(np.int64, copy=False)
+    xf = tokens.astype(np.float64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    start_ticks = np.asarray(start_ticks, dtype=np.int64)
+    doc_start = np.cumsum(lengths) - lengths
+    results: dict[str, dict] = {}
+    # a doc shorter than a tier width is ONE partial window spanning the
+    # whole doc — identical feature values at every such tier (e.g. a
+    # 2000-token doc at 1h AND 1d), so compute once and reuse (~15% of
+    # cascade CPU at the default lognormal doc-length mix; blocks/digests
+    # still differ per tier)
+    whole_doc_rows: dict[int, dict] = {}
+    for tier in tiers:
+        W = TIERS[tier]
+        if np.any(start_ticks % W):
+            raise ValueError(f"segment starts must be multiples of the {tier} width {W}")
+        starts, n, win = split_windows(len(tokens), W, lengths)
+        nw = -(-lengths // W)
+        doc = np.repeat(np.arange(len(lengths)), nw)
+        k = (starts - doc_start[doc]) // W  # window within doc
+        full = n == W
+        cols = {c: np.empty(len(n)) for c in _FLOAT_COLS}
+        if full.any():
+            feats = window_features_matrix(xf[full[win]].reshape(-1, W))
+            for c in _FLOAT_COLS:
+                cols[c][full] = feats[c]
+        tail_rows = []
+        for w in np.flatnonzero(~full).tolist():
+            xw = xf[starts[w] : starts[w] + n[w]]
+            if k[w]:
+                tail_rows.append(_partial_window_row(xw))
+            else:
+                d = int(doc[w])
+                if d not in whole_doc_rows:
+                    whole_doc_rows[d] = _partial_window_row(xw)
+                tail_rows.append(whole_doc_rows[d])
+        for c in _FLOAT_COLS:
+            cols[c][~full] = [r[c] for r in tail_rows]
+        if tier == "1m":
+            blocks = dod_encode_windows(tokens, W, lengths)
+        else:
+            child = "1m" if tier == "1h" else "1h"
+            blocks = xor_encode_windows(results[child]["mean"], W // TIERS[child],
+                                        results[child]["nw"])
+        results[tier] = {
+            "nw": nw,
+            "doc": doc,
+            "window_id": k + start_ticks[doc] // W,
+            "n": n.astype(np.int32),
+            **cols,
+            "block": blocks,
+            "block_digest": [hashlib.sha256(b).hexdigest() for b in blocks],
+        }
+    return results
+
+
 def rollup_doc(doc_id: str, source: str, tokens: np.ndarray,
                tiers: List[str] = TIER_ORDER, start_tick: int = 0) -> dict[str, dict]:
     """All tier rows for one doc (or one day-aligned segment of a giant
     doc: ``start_tick`` offsets window ids; because segments split only at
     86400-tick boundaries — operators/skew.py — start_tick is a multiple
     of every tier width, so per-segment windows are identical to the
-    unsplit computation). Returns {tier: columns-dict}."""
-    tokens = np.asarray(tokens, dtype=np.int64)
-    n = len(tokens)
-    xf = tokens.astype(np.float64)
-    results: dict[str, dict] = {}
-    child_means: dict[str, np.ndarray] = {}
-    whole_doc_row: dict | None = None  # docs shorter than a tier width
-    # produce ONE partial window spanning the whole doc — identical
-    # feature values at every such tier (e.g. a 2000-token doc at 1h AND
-    # 1d), so compute once and reuse (~15% of cascade CPU at the default
-    # lognormal doc-length mix; blocks/digests still differ per tier)
-    for tier in tiers:
-        W = TIERS[tier]
-        nw_full = n // W
-        tail = n - nw_full * W
-        nw = nw_full + (1 if tail else 0)
-        if nw_full:
-            feats = window_features_matrix(xf[: nw_full * W].reshape(nw_full, W))
-        else:
-            feats = {k: np.empty(0) for k in
-                     ["n", "total_sum", "vmin", "vmax", "mean", "m2", "variance"] + HOLISTIC_FIELDS}
-        rows = {k: np.asarray(v, dtype=float) for k, v in feats.items()}
-        if tail:
-            if nw_full == 0 and tail == n:
-                if whole_doc_row is None:
-                    whole_doc_row = _partial_window_row(xf)
-                pr = whole_doc_row
-            else:
-                pr = _partial_window_row(xf[nw_full * W :])
-            # preallocated assembly (np.append's asarray/ravel/concatenate
-            # dispatch showed up at ~5% of kernel CPU: ~15 keys x 3 tiers
-            # per doc on small arrays is call-overhead-dominated)
-            for k in rows:
-                v = rows[k]
-                col = np.empty(len(v) + 1)
-                col[:-1] = v
-                col[-1] = pr[k]
-                rows[k] = col
-        # blocks
-        blocks: list[bytes] = []
-        if tier == "1m":
-            blocks = dod_encode_windows(tokens, W)
-        else:
-            child_tier = "1m" if tier == "1h" else "1h"
-            cm = child_means[child_tier]
-            ratio = W // TIERS[child_tier]
-            blocks = xor_encode_windows(cm, ratio)
-        digests = [hashlib.sha256(b).hexdigest() for b in blocks]
-        assert start_tick % W == 0, "segment start must be window-aligned"
-        results[tier] = {
+    unsplit computation). A one-doc call of the slice kernel that
+    ``rollup_tiers`` runs. Returns {tier: columns-dict}."""
+    tokens = np.asarray(tokens)
+    out: dict[str, dict] = {}
+    for tier, cols in _rollup_slice(tokens, [len(tokens)], [start_tick], tiers).items():
+        nw = len(cols["doc"])
+        out[tier] = {
             "tier": np.full(nw, tier, dtype=object),
             "doc_id": np.full(nw, doc_id, dtype=object),
             "source": np.full(nw, source, dtype=object),
-            "window_id": np.arange(nw, dtype=np.int64) + start_tick // W,
-            **rows,
-            "block": blocks,
-            "block_digest": np.asarray(digests, dtype=object),
+            **{c: cols[c] for c in _NUMERIC_COLS},
+            "block": cols["block"],
+            "block_digest": np.asarray(cols["block_digest"], dtype=object),
         }
-        child_means[tier] = np.asarray(rows["mean"], dtype=np.float64)
-    return results
+    return out
 
 
-def rollup_tiers(df, tiers: List[str] = TIER_ORDER, batch_docs: int = 64,
-                 split_giant_tok: int | None = None, arrow: bool = False):
-    """raw token table -> all-tier rollup DataFrame in ONE mapInPandas
-    scan (no shuffle; AQE/Catalyst see Scan -> MapInPandas).
+def _slice_bounds(offsets: np.ndarray) -> list[int]:
+    """Doc indices that cut a batch with token ``offsets`` into slices of
+    at most SLICE_TOKENS tokens (a longer doc is a slice of its own)."""
+    bounds = [0]
+    n_docs = len(offsets) - 1
+    while bounds[-1] < n_docs:
+        a = bounds[-1]
+        b = int(np.searchsorted(offsets, offsets[a] + SLICE_TOKENS, side="right")) - 1
+        bounds.append(min(max(b, a + 1), n_docs))
+    return bounds
 
-    A mapInArrow twin (zero-copy token slicing, RecordBatch emission) was
-    A/B'd and DELETED (round 5): interleaved runs read pandas at or ahead
-    of arrow at BOTH local[8]/20k docs (medians 21.1s vs 20.3s, within
-    noise) and local[32]/15k docs (min 4.00s vs 4.10s, median 4.01s vs
-    4.97s — BENCH/ab_arrow.json), because rollup_doc compute dominates
-    transfer at every width; ``arrow`` is accepted for API compatibility
-    and ignored. git history (round 4) has the variant if transfer ever
-    becomes the bottleneck.
+
+def _record_batch(res: dict[str, dict], doc_ids, sources, tiers: List[str]):
+    """One Arrow RecordBatch (ROLLUP_SCHEMA) holding every tier's rows of
+    a slice; NaN feature values become nulls, as pandas-to-Arrow did."""
+    import pyarrow as pa
+
+    parts = [res[t] for t in tiers]
+    doc = pa.array(np.concatenate([p["doc"] for p in parts]))
+    tier_idx = np.repeat(np.arange(len(tiers)), [len(p["doc"]) for p in parts])
+    arrays = [pa.array(tiers, pa.string()).take(pa.array(tier_idx)),
+              doc_ids.take(doc), sources.take(doc)]
+    for c in _NUMERIC_COLS:
+        v = np.concatenate([p[c] for p in parts])
+        arrays.append(pa.array(v, mask=np.isnan(v)) if v.dtype.kind == "f" else pa.array(v))
+    arrays.append(pa.array([b for p in parts for b in p["block"]], pa.binary()))
+    arrays.append(pa.array([h for p in parts for h in p["block_digest"]], pa.string()))
+    return pa.RecordBatch.from_arrays(arrays, names=_OUT_COLS)
+
+
+def rollup_tiers(df, tiers: List[str] = TIER_ORDER, split_giant_tok: int | None = None):
+    """raw token table -> all-tier rollup DataFrame in ONE mapInArrow scan
+    (no shuffle; AQE/Catalyst see Scan -> MapInArrow).
+
+    Each Arrow input batch is cut into slices of about SLICE_TOKENS
+    tokens; per slice the kernel (``_rollup_slice``) reads the flat token
+    values and list offsets without a per-doc pandas object, runs one
+    window matrix and one codec pass per tier, and the slice's rows leave
+    as ONE RecordBatch whose tier/doc_id/source columns are built with
+    ``take``. A doc whose ``tokens`` is null or empty yields no rows. An
+    optional ``seg_start`` column gives each row's first tick (the
+    ``split_giant_tok`` segment path); without it every doc starts at 0.
+
+    The round-5 A/B that found mapInArrow no faster than mapInPandas
+    (BENCH/ab_arrow.json) kept the per-doc kernel and changed only the
+    input side, so per-doc and per-window interpreter cost dominated both
+    arms. Batching the kernel across docs is what removes that cost; the
+    Arrow boundary then saves the pandas object columns on both sides.
 
     ``split_giant_tok``: docs longer than this are pre-split into
     day-aligned segments (operators/skew.py) so a single pathological doc
     never pins one task — the output rows are identical to the unsplit
     computation (window-aligned segmentation; pinned by tests)."""
-
-    out_cols = [f.split(" ")[0] for f in ROLLUP_SCHEMA.split(", ")]
-
-    if arrow:
-        # runtime signal to match the docstring (ADVICE r05): the
-        # mapInArrow twin was deleted after the round-5 A/B; arrow=True
-        # silently took the pandas path since then
-        import warnings
-
-        warnings.warn(
-            "rollup_tiers(arrow=True) is ignored: the mapInArrow variant was "
-            "removed (round-5 A/B, BENCH/ab_arrow.json); running mapInPandas.",
-            DeprecationWarning, stacklevel=2)
 
     if split_giant_tok is not None:
         from .skew import split_giant_docs
@@ -382,86 +450,41 @@ def rollup_tiers(df, tiers: List[str] = TIER_ORDER, batch_docs: int = 64,
         n_part = df.sparkSession.sparkContext.defaultParallelism
         seg = split_giant_docs(big, max_tok=split_giant_tok).repartition(
             n_part, "doc_id", "seg_id")
-        out_small = rollup_tiers(small, tiers, batch_docs, None, arrow)
-        return out_small.unionByName(_rollup_segments(seg, tiers, out_cols))
+        return rollup_tiers(small, tiers).unionByName(rollup_tiers(seg, tiers))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches):
         import warnings
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         warnings.filterwarnings("ignore")
         np.seterr(all="ignore")
-        acc: dict[str, list] = {c: [] for c in out_cols}
-        n_acc = 0
+        for batch in batches:
+            toks = batch.column("tokens")
+            keep = pc.fill_null(pc.greater(pc.list_value_length(toks), 0), False)
+            if not pc.all(keep).as_py():
+                batch = batch.filter(keep)
+                toks = batch.column("tokens")
+            if batch.num_rows == 0:
+                continue
+            names = batch.schema.names
+            doc_ids = batch.column("doc_id")
+            sources = (batch.column("source") if "source" in names
+                       else pa.array([""] * batch.num_rows, pa.string()))
+            starts = (batch.column("seg_start").to_numpy() if "seg_start" in names
+                      else np.zeros(batch.num_rows, dtype=np.int64))
+            offsets = toks.offsets.to_numpy()
+            values = toks.flatten().to_numpy()
+            offsets = offsets - offsets[0]
+            bounds = _slice_bounds(offsets)
+            for a, b in zip(bounds[:-1], bounds[1:]):
+                res = _rollup_slice(values[offsets[a]:offsets[b]], np.diff(offsets[a:b + 1]),
+                                    starts[a:b], tiers)
+                yield _record_batch(res, doc_ids.slice(a, b - a), sources.slice(a, b - a), tiers)
 
-        def flush():
-            from itertools import chain
-
-            return pd.DataFrame({c: np.concatenate(acc[c]) if c not in ("block",)
-                                 else list(chain.from_iterable(acc[c])) for c in out_cols})
-
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy()
-            sources = pdf["source"].to_numpy() if "source" in pdf else np.full(len(pdf), "")
-            tok_col = pdf["tokens"].to_numpy()
-            for doc_id, source, toks in zip(doc_ids, sources, tok_col):
-                per_tier = rollup_doc(doc_id, source, np.asarray(toks), tiers)
-                for tier in tiers:
-                    cols = per_tier[tier]
-                    for c in out_cols:
-                        acc[c].append(cols[c])
-                    n_acc += len(cols["window_id"])
-                if n_acc >= 4096:
-                    yield flush()
-                    acc = {c: [] for c in out_cols}
-                    n_acc = 0
-        if n_acc:
-            yield flush()
-
-    cols = df.columns
-    needed = [c for c in ("doc_id", "tokens", "source") if c in cols]
-    return df.select(*needed).mapInPandas(run, schema=ROLLUP_SCHEMA)
-
-
-def _rollup_segments(seg_df, tiers: List[str], out_cols: List[str]):
-    """Cascade over pre-split (doc_id, seg_id, seg_start, tokens, source)
-    segments; window ids carry the segment's tick offset so the union of
-    segment rows equals the unsplit rollup."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import warnings
-
-        warnings.filterwarnings("ignore")
-        np.seterr(all="ignore")
-        acc: dict[str, list] = {c: [] for c in out_cols}
-        n_acc = 0
-
-        def flush():
-            from itertools import chain
-
-            return pd.DataFrame({c: np.concatenate(acc[c]) if c not in ("block",)
-                                 else list(chain.from_iterable(acc[c])) for c in out_cols})
-
-        for pdf in batches:
-            for doc_id, source, toks, start in zip(
-                pdf["doc_id"].to_numpy(), pdf["source"].to_numpy(),
-                pdf["tokens"].to_numpy(), pdf["seg_start"].to_numpy(),
-            ):
-                per_tier = rollup_doc(doc_id, source, np.asarray(toks), tiers,
-                                      start_tick=int(start))
-                for tier in tiers:
-                    cols = per_tier[tier]
-                    for c in out_cols:
-                        acc[c].append(cols[c])
-                    n_acc += len(cols["window_id"])
-                if n_acc >= 4096:
-                    yield flush()
-                    acc = {c: [] for c in out_cols}
-                    n_acc = 0
-        if n_acc:
-            yield flush()
-
-    sel = seg_df.select("doc_id", "seg_start", "tokens", "source")
-    return sel.mapInPandas(run, schema=ROLLUP_SCHEMA)
+    needed = [c for c in ("doc_id", "tokens", "source", "seg_start") if c in df.columns]
+    return df.select(*needed).mapInArrow(run, schema=ROLLUP_SCHEMA)
 
 
 def merge_algebraic(tier_df, from_tier: str, to_tier: str):
