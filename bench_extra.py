@@ -1,11 +1,10 @@
-"""Per-query measurement harness for the optimization round (guide §1).
+"""Per-query measurement harness.
 
-bench.py is FROZEN for driver measurement; this file reproduces its exact
-session + timing methodology (same get_spark confs, same maxPartitionBytes
-override the rollup phase leaves behind, same ``.count()`` action, min of
-N trials) but runs ONE query (or a subset) at a time so a change can be
-measured in isolation, and can dump ``.explain('formatted')`` plans to
-plans/r06/.
+Uses bench.py's session and timing method (same get_spark confs, a
+maxPartitionBytes override like the one bench.py's rollup phase leaves
+behind, same ``.count()`` action, min of N trials) but runs ONE query (or
+a subset) at a time so a change can be measured in isolation, and can
+dump ``.explain('formatted')`` plans to plans/r06/.
 
 Usage:
   python bench_extra.py [query ...]              # time queries (default: bench set)
@@ -27,8 +26,10 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from tsfeatures_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 TRIALS = int(os.environ.get("SPARK_GRAFT_QUERY_TRIALS", "3"))
 
 
@@ -52,8 +53,8 @@ def main() -> None:
     spark = get_spark("bench_extra", cpus=CPUS, shuffle_partitions=max(CPUS, 8))
     spark.sparkContext.setLogLevel("ERROR")
     entrymod._ensure_pkg_on_executors(spark)
-    # identical leftover conf to bench.py's rollup phase (split floor = 1MB
-    # for the 89MB token table at CPUS=32)
+    # bench.py's rollup phase leaves maxPartitionBytes at its 1MB split
+    # floor on a many-core host (89MB token table, 16 splits per core)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 20))
     spark.conf.set("spark.sql.files.openCostInBytes", str(1 << 18))
 
@@ -115,7 +116,7 @@ def main() -> None:
         spark.stop()
         return
 
-    # warm the JVM + python workers the way the frozen bench's earlier
+    # warm the JVM + python workers the way bench.py's earlier
     # phases do, so first-trial numbers aren't JIT/fork noise
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
     qs["doc_quality"](spark, SF_DIR).count()

@@ -197,3 +197,23 @@ def test_minhash_pairs_match_per_doc_reference(spark):
     # the planted 6-identical group must appear as all 15 intra pairs at est 1.0
     grp = [(a, b) for (a, b) in got if a.startswith("grp-") and b.startswith("grp-")]
     assert len(grp) == 15 and all(got[p] == 1.0 for p in grp)
+
+
+@pytest.mark.parametrize("fn", ["minhash_lsh_pairs", "simhash_near_pairs"])
+def test_near_pairs_accept_int64_ids(spark, fn):
+    """The member-id list of each unique text keeps the id column's type,
+    so a bigint ``doc_id`` works like a string one."""
+    from tsfeatures_spark.operators import dedup
+
+    rng = np.random.default_rng(5)
+    words = ["lorem", "ipsum", "dolor", "sit", "amet", "sed", "eiusmod", "tempor"]
+    texts = [" ".join(rng.choice(words, size=60)) + f" doc{i}" for i in range(12)]
+    texts.append(texts[3])  # planted duplicate of doc 3, id 12
+    pdf = pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts})
+    df = spark.createDataFrame(pdf)
+    assert df.schema["doc_id"].dataType.simpleString() == "bigint"
+
+    out = getattr(dedup, fn)(df)
+    rows = out.collect()
+    assert out.schema["id_a"].dataType.simpleString() == "bigint"
+    assert (3, 12) in {(r.id_a, r.id_b) for r in rows}

@@ -103,3 +103,15 @@ def test_spark_submit_py_files_multi_executor(tmp_path):
         "SELECT count(DISTINCT bucket) FROM read_parquet($f)",
         {"f": lin_files}).fetchone()
     assert n_buckets == 4, f"lineage covers {n_buckets}/4 buckets"
+
+
+def test_default_cpus_env_then_affinity(monkeypatch):
+    """``get_spark``'s ``local[n]`` default: SPARK_GRAFT_CPUS when set,
+    else the cores this process may run on (what ``taskset`` grants)."""
+    from tsfeatures_spark.session import default_cpus
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5, 7, 9})
+    assert default_cpus() == 5

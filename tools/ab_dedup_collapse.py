@@ -15,8 +15,10 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from tsfeatures_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(REPO, ".data", "sf1.0"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 PAIRS = int(sys.argv[1]) if len(sys.argv) > 1 else 4
 
 

@@ -225,6 +225,11 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
         run, schema=f"{id_col} {id_type}, sig array<long>")
 
 
+def _ids_type(df: DataFrame, id_col: str) -> str:
+    """DDL type of the ``collect_list`` of ``id_col`` (member ids per text)."""
+    return f"array<{df.schema[id_col].dataType.simpleString()}>"
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                       num_hashes: int = 64, bands: int = 16, shingle: int = 5,
                       seed: int = 42) -> DataFrame:
@@ -262,7 +267,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     reps = fp.groupBy("_fp").agg(F.first(text_col).alias(text_col),
                                  F.collect_list(id_col).alias("_ids"))
     rep_sig = minhash_signatures(reps, text_col, "_ids", num_hashes, shingle, seed,
-                                 id_type="array<string>")
+                                 id_type=_ids_type(df, id_col))
     # EAGER materialization of the per-doc signature table (r06): it has
     # four consumers (band join l/r + the two signature rejoins) whose
     # leaf stages Spark submits CONCURRENTLY — against a lazy plan each
@@ -367,7 +372,7 @@ def simhash_near_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc
     fp = df.withColumn("_fp", F.md5(F.col(text_col)))
     reps = fp.groupBy("_fp").agg(F.first(text_col).alias(text_col),
                                  F.collect_list(id_col).alias("_ids"))
-    rep_sig = simhash_signatures(reps, text_col, "_ids", id_type="array<string>")
+    rep_sig = simhash_signatures(reps, text_col, "_ids", id_type=_ids_type(df, id_col))
     sig = (rep_sig.select(F.explode("_ids").alias(id_col), "simhash")
            .localCheckpoint())
     banded = sig.select(
