@@ -70,6 +70,11 @@ def ensure_token_table(spark, path: str) -> None:
     write_token_table(spark, path, n_docs=N_DOCS, base_seed=42, buckets=max(CPUS * 2, 16))
 
 
+def _passes(var: str, default: int) -> int:
+    """The fixed number of timed passes set by ``var``; at least one."""
+    return max(int(os.environ.get(var, str(default))), 1)
+
+
 def main() -> None:
     from pyspark.sql import functions as F
 
@@ -117,7 +122,7 @@ def main() -> None:
     # best-of-N trials: the sandbox VM has heavy steal-time noise (identical
     # consecutive runs vary 3x); min wall time = the pipeline's capability.
     # The JSON records the full spread and the median.
-    trials = max(int(os.environ.get("SPARK_GRAFT_TRIALS", "5")), 1)
+    trials = _passes("SPARK_GRAFT_TRIALS", 5)
     trial_secs: list[float] = []
     for _ in range(trials):
         shutil.rmtree(out_path, ignore_errors=True)
@@ -137,7 +142,7 @@ def main() -> None:
     qs = entrymod.queries()
     timings: dict[str, float] = {}
     timings["rollup_cascade"] = round(rollup_sec, 3)
-    q_trials = max(int(os.environ.get("SPARK_GRAFT_QUERY_TRIALS", "3")), 1)
+    q_trials = _passes("SPARK_GRAFT_QUERY_TRIALS", 3)
     # reference-API throughput: the full default 17-kernel tsfeatures
     # set (incl. Holt/HW/GARCH/STL fits) over M4-scale series — the
     # single-node comparison point vs the reference's

@@ -1,258 +1,42 @@
-"""Era-relative quiet scoring in the scaling harness (round 5):
-_era_pmax must read only same-shape probes inside the window, and
-_summarize must label pairs era-quiet only when BOTH arms clear
-QUIET_FRAC of the contemporaneous ceiling. Pure-python, no Spark."""
+"""The CPU side of the N -> 4N scaling recipe.
 
-import json
-import os
+Scaling is two perfbench runs under ``taskset`` (README "Running"); the
+work each side did is perfbench's ``cpu_s``, the process-tree CPU that
+``Job.timed`` records around a job. These tests pin that it counts the
+CPU of children and of their own children (the JVM and the Python
+workers in a real run), and that a failing job still has its CPU
+recorded. Pure Python, no Spark."""
+
+import subprocess
 import sys
 
 import pytest
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, os.path.join(REPO, "tools"))
+from perfbench.harness import Job
 
-import run_scaling as rs  # noqa: E402
-
-T0 = 1_000_000_000.0
-
-
-def _pair(t, ps, pb, sec_s=40.0, sec_b=10.0):
-    return {"rev": rs.KERNEL_REV, "t": t,
-            "small": {"sec": sec_s, "tps": 1e6 * 40 / sec_s, "probe": ps,
-                      "tokens": 40_000_000},
-            "big": {"sec": sec_b, "tps": 1e6 * 40 / sec_b, "probe": pb,
-                    "tokens": 40_000_000}}
-
-
-def test_era_pmax_windows_and_cores():
-    hist = [
-        {"t": T0, "cores": 16, "probe": 50000.0},
-        {"t": T0 + 100, "cores": 8, "probe": 90000.0},   # wrong shape
-        {"t": T0 + 5 * 3600, "cores": 16, "probe": 70000.0},  # outside +-3h
-    ]
-    assert rs._era_pmax(T0 + 60, 16, hist) == 50000.0
-    assert rs._era_pmax(T0 + 60, 16, hist,
-                        pair_probes=[(T0 + 30, 52000.0)]) == 52000.0
-    assert rs._era_pmax(T0 + 60, 32, hist) == 0.0
-
-
-def test_summarize_era_quiet_labeling(monkeypatch, tmp_path):
-    # history: era ceiling 46k around T0; pmax on disk is a stale 49.3k
-    hist_file = tmp_path / "hist.jsonl"
-    with open(hist_file, "w") as f:
-        f.write(json.dumps({"t": T0, "cores": 16, "probe": 46000.0}) + "\n")
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(hist_file))
-
-    quiet_pair = _pair(T0 + 600, 43000.0, 44000.0)   # both >= .93*46k=42.78k
-    noisy_pair = _pair(T0 + 700, 30000.0, 45000.0)   # small arm noisy
-    stale = _pair(T0 + 800, 49300.0, 49300.0)
-    stale.pop("t")                                    # untimestamped legacy
-    stale["rev"] = "legacy"
-    results = {"none": [quiet_pair, noisy_pair, stale], "parquet": []}
-
-    s = rs._summarize(results, probe_cores=16)
-    sm = s["modes"]["none"]
-    # absolute bar: pmax = 49.3k (stale pair), bar 45.85k -> nothing quiet
-    assert s["pmax"] == 49300.0 and sm["n_quiet"] == 0
-    # era bar: ceiling 46k -> exactly the controlled pair qualifies
-    assert sm["n_quiet_era"] == 1
-    assert sm["eff_quiet_era"] == pytest.approx(40.0 / (4 * 10.0))
-    assert sm["era_frac_of_best"] == pytest.approx(46000.0 / 49300.0)
-    # no probe_cores hint -> era fields stay empty, absolute bar unchanged
-    s2 = rs._summarize(results)
-    assert s2["modes"]["none"]["n_quiet_era"] == 0
-
-
-def test_summarize_era_needs_positive_ceiling(monkeypatch, tmp_path):
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(tmp_path / "none.jsonl"))
-    lone = _pair(T0, 30000.0, 30500.0)
-    s = rs._summarize({"none": [lone], "parquet": []}, probe_cores=16)
-    # the pair's own legs are era evidence: ceiling 30.5k, both arms within
-    # 7% of it -> era-quiet (self-consistent pair), labeled with its low
-    # era fraction so it can't masquerade as a best-era measurement
-    sm = s["modes"]["none"]
-    assert sm["n_quiet_era"] == 1
-    assert sm["era_frac_of_best"] == pytest.approx(1.0)
-
-
-def test_robust_pmax_requires_ceiling_seen_twice():
-    """Large pools: a lone spike cannot set the quiet bar (extreme order
-    statistics ratchet with sample count); the ceiling is the 2nd-highest
-    DISTINCT sample. Small pools keep the max (no self-certification)."""
-    base = [40000.0 + i for i in range(25)]          # 25 distinct samples
-    assert rs._robust_pmax(base + [52300.0]) == base[-1]
-    # a level seen twice counts (distinct values; same-instant duplicate
-    # logs of one probe collapse via set() and cannot self-confirm)
-    assert rs._robust_pmax(base + [52300.0, 52300.0]) == base[-1]
-    assert rs._robust_pmax(base + [52300.0, 52300.5]) == 52300.0
-    # small pool: plain max
-    assert rs._robust_pmax([28500.0, 28600.0, 46000.0]) == 46000.0
-    assert rs._robust_pmax([]) == 0.0
-
-
-def test_summarize_quiet_bar_ignores_lone_spike(monkeypatch, tmp_path):
-    """End to end: a pair quiet against the demonstrated (twice-seen)
-    ceiling stays quiet when one later spike sample lands in the history."""
-    hist_file = tmp_path / "hist.jsonl"
-    with open(hist_file, "w") as f:
-        for i in range(30):
-            f.write(json.dumps({"t": T0 + i, "cores": 16,
-                                "probe": 48000.0 + i}) + "\n")
-        f.write(json.dumps({"t": T0 + 100, "cores": 16,
-                            "probe": 52300.0}) + "\n")
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(hist_file))
-    pair = _pair(T0 + 200, 47000.0, 48400.0)
-    s = rs._summarize({"none": [pair], "parquet": []}, probe_cores=16)
-    # pool = history + the pair's own legs; 2nd-highest distinct = 48400
-    # (the pair's big leg), NOT the lone 52.3k spike
-    assert s["pmax"] == 48400.0 and s["pmax_obs"] == 52300.0
-    assert s["modes"]["none"]["n_quiet"] == 1
-
-
-def test_docs_for_multiplier():
-    assert rs.docs_for("cluster2", 20000) == 20000
-    assert rs.docs_for("cluster2x3", 20000) == 60000
+# a child that burns CPU in a grandchild and waits for it
+_BURN = ("import subprocess, sys;"
+         "subprocess.run([sys.executable, '-c',"
+         "'x=0\\nfor i in range(4*10**6): x+=i*i']);"
+         "print('OUT-MARKER'); sys.stderr.write('ERR-MARKER')")
 
 
 def test_run_with_tree_cpu_captures_output_and_cpu():
-    """os.wait4 path: stdout/stderr captured, exit code right, and the
-    rusage covers CPU burned by the child's own CHILDREN (the JVM/daemon
-    tree in real legs)."""
-    code = ("import subprocess, sys;"
-            "subprocess.run([sys.executable, '-c',"
-            "'x=0\\nfor i in range(4*10**6): x+=i*i']);"
-            "print('OUT-MARKER'); sys.stderr.write('ERR-MARKER')")
-    out, err, rc, cpu = rs._run_with_tree_cpu(
-        [sys.executable, "-c", code], dict(os.environ), timeout=60)
-    assert rc == 0 and "OUT-MARKER" in out and "ERR-MARKER" in err
-    assert cpu is not None and cpu > 0.05
+    job = Job()
+    with job.timed("leg"):
+        r = subprocess.run([sys.executable, "-c", _BURN],
+                           capture_output=True, text=True, timeout=60)
+    assert r.returncode == 0
+    assert "OUT-MARKER" in r.stdout and "ERR-MARKER" in r.stderr
+    assert job.cpu["leg"] > 0.05 and job.cpu_s == job.cpu["leg"]
+    assert job.wall["leg"] > 0 and job.wall_s == job.wall["leg"]
 
 
 def test_run_with_tree_cpu_propagates_failure():
-    out, err, rc, cpu = rs._run_with_tree_cpu(
-        [sys.executable, "-c", "import sys; sys.exit(3)"],
-        dict(os.environ), timeout=60)
-    assert rc == 3
-
-
-def test_load_prior_keeps_cpu_annotation(monkeypatch, tmp_path):
-    """cpu_s recorded on a leg must survive the save->_load_prior round
-    trip (the work-conservation section reads it from disk)."""
-    p = _pair(T0, 46000.0, 46000.0)
-    p["small"]["cpu_s"] = 123.4
-    p["big"]["cpu_s"] = 130.1
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    with open(tmp_path / "BENCH" / "trials_cpu.json", "w") as f:
-        json.dump({"n_docs": 20000, "results": {"none": [p], "parquet": []}}, f)
-    monkeypatch.setitem(rs.PROTOCOLS["cluster2"], "file", "trials_cpu.json")
-    monkeypatch.setattr(rs, "REPO", str(tmp_path))
-    loaded = rs._load_prior("cluster2", 20000)
-    assert loaded["none"][0]["small"]["cpu_s"] == 123.4
-    assert loaded["none"][0]["big"]["cpu_s"] == 130.1
-
-
-def test_work_conservation_section_renders(monkeypatch, tmp_path):
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(tmp_path / "none.jsonl"))
-    p1 = _pair(T0, 40000.0, 40000.0)
-    p1["small"].update(cpu_s=100.0, passes=1)
-    p1["big"].update(cpu_s=110.0, passes=1)
-    # pass-mismatched pair (adaptive-loop era): must be EXCLUDED
-    p2 = _pair(T0 + 50, 40000.0, 40000.0)
-    p2["small"].update(cpu_s=500.0, passes=2)
-    p2["big"].update(cpu_s=5375.0, passes=9)
-    all_results = {"cluster2": {"none": [p1, p2], "parquet": []}}
-    monkeypatch.setattr(rs, "REPO", str(tmp_path))  # no cpu_floor.json
-    txt = rs._work_conservation_section(all_results)
-    assert "Work conservation" in txt
-    # no floor file: marginal == raw; p2 excluded (2 vs 9 passes)
-    assert "| cluster2 | compute | 1 | 100.0s | 110.0s | 0.909 | 0.909 |" in txt
-    # with a floor file: marginal = (100-10) vs (110-30) -> wc 1.125
-    os.makedirs(tmp_path / "BENCH", exist_ok=True)
-    with open(tmp_path / "BENCH" / "cpu_floor.json", "w") as f:
-        json.dump({"n_docs": 200, "arms": {
-            "local-cluster[2,2,4096]": {"cpu_s": 10.0},
-            "local-cluster[8,2,4096]": {"cpu_s": 30.0}}}, f)
-    txt = rs._work_conservation_section(all_results)
-    assert "| cluster2 | compute | 1 | 90.0s | 80.0s | 1.125 | 1.125 |" in txt
-    # e2e pairs get their own phase row (same floors)
-    p3 = _pair(T0 + 99, 40000.0, 40000.0)
-    p3["small"].update(cpu_s=130.0, passes=1)
-    p3["big"].update(cpu_s=150.0, passes=1)
-    all_results["cluster2"]["parquet"] = [p3]
-    txt = rs._work_conservation_section(all_results)
-    assert "| cluster2 | e2e | 1 | 120.0s | 120.0s | 1.000 | 1.000 |" in txt
-    # pairs without cpu_s annotations: section omitted entirely
-    assert rs._work_conservation_section(
-        {"cluster2": {"none": [_pair(T0, 1.0, 1.0)], "parquet": []}}) == ""
-
-
-def test_fresh_protocol_cannot_self_certify_quiet(monkeypatch, tmp_path):
-    """A new trials file's first pair must be scored against the host
-    ceiling from the shared probe history, not its own probes."""
-    hist_file = tmp_path / "hist.jsonl"
-    with open(hist_file, "w") as f:
-        f.write(json.dumps({"t": T0 - 100, "cores": 16, "probe": 46000.0}) + "\n")
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(hist_file))
-    lone = _pair(T0, 28500.0, 28600.0)  # balanced but at 62% of the ceiling
-    s = rs._summarize({"none": [lone], "parquet": []}, probe_cores=16)
-    sm = s["modes"]["none"]
-    assert s["pmax"] == 46000.0
-    assert sm["n_quiet"] == 0          # absolute bar: not quiet
-    assert sm["n_quiet_era"] == 0      # era ceiling 46k within +-3h: not quiet
-
-
-def test_north_rule_verdict_labels(monkeypatch, tmp_path):
-    """The computed north-rule table must label each proxy from its own
-    controlled figure: >=0.8 meets the bar outright; a ceiling-bound proxy
-    within 95% of its measured no-engine ceiling reads 'at the host
-    ceiling'; no ceiling evidence + low eff reads 'below the bar here'."""
-    monkeypatch.setattr(rs, "PROBE_HISTORY", str(tmp_path / "none.jsonl"))
-    monkeypatch.setattr(rs, "REPO", str(tmp_path))  # no mp_ceiling*.json
-
-    # quiet self-consistent pairs (equal probes -> both arms clear the bar)
-    meets = _pair(T0, 46000.0, 46000.0, sec_b=40.0 / (4 * 0.85))   # 0.850
-    at_ceil = _pair(T0, 46000.0, 46000.0, sec_b=40.0 / (4 * 0.68))  # 0.680
-    below = _pair(T0, 46000.0, 46000.0, sec_b=40.0 / (4 * 0.60))   # 0.600
-    e2e = _pair(T0, 46000.0, 46000.0, sec_b=40.0 / (4 * 0.75))     # 0.750
-    txt = rs._north_rule_verdict({
-        "local2": {"none": [meets], "parquet": [e2e]},
-        "local8": {"none": [at_ceil], "parquet": []},
-        "cluster2": {"none": [below], "parquet": []},
-    })
-    rows = {ln.split("|")[1].strip(): ln for ln in txt.splitlines()
-            if ln.startswith("| ")}
-    assert "**meets the >=0.8 bar**" in rows["local2"]
-    assert "~1.0 (arms under host capacity)" in rows["local2"]
-    # local8: measured ceiling 0.69 -> rel 0.68/0.69 = 0.99 -> at ceiling
-    assert "| 0.69 | 0.99 | at the host ceiling |" in rows["local8"]
-    # cluster2: no mp_ceiling.json under the patched REPO -> no rel column
-    assert "below the bar here" in rows["cluster2"]
-    assert "local2 e2e 0.750" in txt
-
-
-def test_proto_rev_layout_suffix_and_bucketing():
-    """cluster2x3 carries an input-LAYOUT-suffixed rev (the 60k table was
-    rewritten with bounded row groups mid-round-5); every other protocol
-    stays on the global KERNEL_REV, and _summarize must keep pre-fix pairs
-    out of the suffixed bucket (and vice versa)."""
-    assert rs.proto_rev("cluster2x3") == rs.KERNEL_REV + "+rg2m"
-    for proto in rs.PROTOCOLS:
-        if proto != "cluster2x3":
-            assert rs.proto_rev(proto) == rs.KERNEL_REV
-
-    old = _pair(T0, 40000.0, 40000.0, sec_s=80.0, sec_b=40.0)  # fat-rg era
-    new = _pair(T0 + 100, 40000.0, 40000.0, sec_s=50.0, sec_b=17.0)
-    new["rev"] = rs.proto_rev("cluster2x3")
-    results = {"none": [old, new], "parquet": []}
-
-    s_new = rs._summarize(results, rev=rs.proto_rev("cluster2x3"))
-    sm = s_new["modes"]["none"]
-    assert sm["n_pairs"] == 1
-    assert sm["best_small"]["sec"] == 50.0 and sm["best_big"]["sec"] == 17.0
-    # min-wall must NOT pair the old slow small arm with the new fast big
-    assert abs(sm["eff_min"] - 50.0 / (4 * 17.0)) < 1e-9
-
-    s_old = rs._summarize(results, rev=rs.KERNEL_REV)
-    smo = s_old["modes"]["none"]
-    assert smo["n_pairs"] == 1 and smo["best_big"]["sec"] == 40.0
+    job = Job()
+    with pytest.raises(subprocess.CalledProcessError) as err:
+        with job.timed("leg"):
+            subprocess.run([sys.executable, "-c", _BURN + ";sys.exit(3)"],
+                           capture_output=True, timeout=60, check=True)
+    assert err.value.returncode == 3
+    assert job.cpu["leg"] > 0.05
